@@ -201,61 +201,21 @@ HEADLINE = [
 ]
 
 
-# Timed queries whose WARM reps serve a session-persisted per-corpus
-# index/model or a once-per-corpus disk layout (built during their own
-# cold rep or the declared bench setup; nothing persists across
-# processes). Their warm column measures serving-with-index; the cold
-# column is the honest build+serve cost (r16 verdict item #7 —
-# round-over-round warm claims on these names should be discounted or
-# read against cold).
-CACHE_BACKED = [
-    # MEMORY_AND_DISK persisted frames
-    "copurchase_pairs",
-    "basket_association_rules",
-    "copurchase_pagerank",
-    "copurchase_triangles",
-    "copurchase_communities",
-    "rec_hitrate_eval",
-    "negative_samples",
-    "hard_negative_samples",
-    "kmeans_centroid_fit",
-    "kmeans_silhouette",
-    "rfm_kmeans_segments",
-    "tfidf_top_terms",
-    "bm25_search",
-    "phrase_search",
-    "minhash_lsh_dupes",
-    "incremental_lsh_dedup",
-    "containment_dupes",
-    "substring_dedup_spans",
-    "decontaminate_spans",
-    "eval_overlap_report",
-    "dup_span_histogram",
-    "curation_signal_table",
-    "corpus_prepare_decontaminated",
-    # fit-once literal models (collected once per corpus version)
-    "histogram_quantile_estimate",
-    "token_budget_select",
-    "dsir_importance_weights",
-    "nb_calibration_report",
-    # declared bench-setup storage investments (see setup block below)
-    "ann_ivfpq_topk",
-    "bucketed_join_rollup",
-    # once-per-corpus disk layouts (ensure_* atomic artifacts)
-    "erasure_propagation",
-    "ivf_rebalance_apply",
-    "ivf_index_merge",
-    "compaction_apply_reconcile",
-    "mv_incremental_merge",
-    "mv_join_delta_merge",
-    "histogram_delta_merge",
-    "ndv_delta_merge",
-    "zorder_layout_prune",
-]
+def _store_delta(before: dict, after: dict, i: int) -> int:
+    """Artifact-store hits (i=0) or builds (i=1) between two
+    ``artifacts.stats()`` snapshots, over every name except the lazy
+    table handles (``table:*``): every query resolves those, so they
+    mark no query as served by a per-corpus artifact."""
+    return sum(
+        c[i] - before.get(n, (0, 0))[i]
+        for n, c in after.items()
+        if not n.startswith("table:")
+    )
 
 
 def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from multichannel_commerce_data_pipeline_spark import artifacts
     from multichannel_commerce_data_pipeline_spark.queries import load_registry
     from multichannel_commerce_data_pipeline_spark.session import get_spark
 
@@ -345,14 +305,25 @@ def main() -> None:
     # hiding real regressions. HEADLINE value = warm total: r1-r3 showed
     # cold moving ±15% run-to-run with zero plan changes, so cold totals
     # are reported alongside but are not the comparison metric.
+    #
+    # Cache-cold honesty (r16 verdict item #7): a query whose WARM reps
+    # are served by the artifact store (a session-persisted per-corpus
+    # index/model, a memoized plan, or a once-per-corpus disk layout,
+    # built in its own cold rep, an earlier query or the setup above —
+    # nothing persists across processes) measures serving-with-index
+    # in its warm column; its cold column is the honest build+serve
+    # cost. The store's own counters decide the label per query.
     timings: dict[str, float] = {}
     warm: dict[str, float] = {}
+    store: dict[str, dict[str, int]] = {}
     for name in HEADLINE:
+        s0 = artifacts.stats()
         t0 = time.perf_counter()
         registry[name].fn(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
         timings[name] = round(time.perf_counter() - t0, 3)
+        s1 = artifacts.stats()
         reps = []
         for _ in range(3):
             t0 = time.perf_counter()
@@ -361,6 +332,12 @@ def main() -> None:
             ).save()
             reps.append(time.perf_counter() - t0)
         warm[name] = round(min(reps), 3)
+        s2 = artifacts.stats()
+        store[name] = {
+            "cold_builds": _store_delta(s0, s1, 1),
+            "warm_hits": _store_delta(s1, s2, 0),
+            "warm_builds": _store_delta(s1, s2, 1),
+        }
 
     # Per-query maps go to a FILE (bench_detail.json, consumed by
     # BENCH.md): r5's 40-query inline maps pushed the stdout JSON line
@@ -380,14 +357,12 @@ def main() -> None:
         "loadavg_after": [round(x, 2) for x in load_after],
         "load_wait_sec": load_wait,
         "wall_clock_sec": round(time.perf_counter() - run_t0, 1),
-        # Cache-cold honesty (r16 verdict item #7): these queries'
-        # WARM reps serve session-persisted per-corpus indexes/models
-        # (the maintained feature-store convention, built inside their
-        # own COLD rep — nothing persists across processes), so their
-        # warm number measures serving-with-index and the `queries`
-        # (cold) column is the honest build+serve cost. BENCH.md must
-        # report both columns for these names.
-        "cache_backed": CACHE_BACKED,
+        # queries whose warm reps the artifact store served (see the
+        # timing loop); BENCH.md must report both columns for them
+        "cache_backed": [
+            n for n in HEADLINE if store[n]["warm_hits"] and not store[n]["warm_builds"]
+        ],
+        "store": store,
     }
     here = os.path.dirname(os.path.abspath(__file__))
     detail_name = (

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import memo
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     memo_cols,
@@ -128,12 +129,6 @@ def passage_dedup(
     )
 
 
-# persist=True frames, memoized per (applicationId, input semanticHash,
-# split args) so repeated calls share one cached frame (ADVICE r12);
-# stale-application entries are evicted at the next persisting call.
-_BOILERPLATE_PERSISTED: dict[tuple, DataFrame] = {}
-
-
 def boilerplate_lines(
     df: DataFrame,
     id_col: str,
@@ -197,12 +192,11 @@ def boilerplate_lines(
     corpus_prepare_decontaminated makes for ITS shared words frame —
     for callers whose memory budget allows it: the digest arrays are
     then computed exactly once (values identical either way, asserted
-    in tests/test_operators.py). The persisted frame is MEMOIZED per
-    (applicationId, input semanticHash, split args) like the
-    session_memo-backed indexes — repeated persist=True calls over the
-    same input reuse one cached frame instead of accumulating a new
-    MEMORY_AND_DISK entry per invocation; entries from dead
-    applications are evicted on the next call.
+    in tests/test_operators.py). The persisted frame lives in the
+    artifact store under the input's semanticHash and the split args,
+    so repeated persist=True calls over the same input reuse one cached
+    frame instead of accumulating a new MEMORY_AND_DISK entry per
+    invocation.
     """
     base = df.select(
         F.col(id_col).alias("doc"), F.split(F.col(text_col), " ").alias("__ws")
@@ -227,42 +221,19 @@ def boilerplate_lines(
     if persist:
         from pyspark import StorageLevel
 
-        spark = df.sparkSession
-        key = (
-            spark.sparkContext.applicationId,
-            df.semanticHash(),
-            id_col,
-            text_col,
-            line_words,
+        entry = memo(
+            df.sparkSession,
+            f"boilerplate:{df.semanticHash()}:{id_col}:{text_col}:{line_words}",
+            "",
+            lambda: base.persist(StorageLevel.MEMORY_AND_DISK),
         )
-        for stale in [
-            k for k in _BOILERPLATE_PERSISTED if k[0] != key[0]
-        ]:
-            evicted = _BOILERPLATE_PERSISTED.pop(stale)
-            try:
-                # best-effort, mirroring session_memo: usually the
-                # evicted entry's session is already dead (nothing to
-                # free), but a live concurrent session's frame would
-                # otherwise stay pinned until that session exits
-                evicted.unpersist()
-            except Exception:
-                pass
-        entry = _BOILERPLATE_PERSISTED.get(key)
-        if entry is not None and not base.sameSemantics(entry):
-            # semanticHash() is a 32-bit best-effort hash: a collision
-            # between two DIFFERENT inputs would silently serve the
-            # other input's digests. Confirm with the full-plan
-            # sameSemantics check before reuse; on mismatch, evict and
-            # rebuild (correctness over cache hit — ADVICE r13).
-            try:
-                entry.unpersist()
-            except Exception:
-                pass
-            entry = None
-        if entry is None:
-            entry = base.persist(StorageLevel.MEMORY_AND_DISK)
-            _BOILERPLATE_PERSISTED[key] = entry
-        base = entry
+        # semanticHash() is a 32-bit best-effort hash: a collision
+        # between two DIFFERENT inputs would serve the other input's
+        # digests. Confirm with the full-plan sameSemantics check and,
+        # on mismatch, fall back to the unpersisted plan (correctness
+        # over cache hit — ADVICE r13).
+        if base.sameSemantics(entry):
+            base = entry
     narrow = (
         base.select(
             "doc", F.posexplode_outer("__digs").alias("lidx", "ldigest")

@@ -2,9 +2,11 @@
 
 The reference reads bronze with inferred schema and flattens the
 envelope in one select (bronze_to_silver_all_sources.py:26-27). We read
-with an explicit StructType (no inference pass; bad records preserved in
-a corrupt-record column rather than silently dropped) and keep the
-flatten as its own operator.
+with an explicit StructType (no inference pass) and keep the flatten as
+its own operator. Malformed input is NOT captured: the envelope DDL has
+no corrupt-record column, so in PERMISSIVE mode a truncated line becomes
+a row of NULL fields and an unparsable field value becomes NULL. There
+is no reject path yet.
 
 At scale: the 4-level wildcard lists every key. The layout is kept for
 parity, but ``read_bronze`` also accepts a Hive-partitioned root

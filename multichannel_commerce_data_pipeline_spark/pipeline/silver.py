@@ -14,6 +14,8 @@ Spark and DuckDB regex dialects, and no double→string round-trips.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -238,3 +240,14 @@ def oracle_conform_gsheets(root: str | None = None) -> str:
       FROM {oracle_bronze_from("gsheets", root)}
     )
     """
+
+
+# The medallion path's one source -> conformer table, shared by the
+# batch pipeline queries and the streaming jobs.
+CONFORMERS: dict[str, Callable[[DataFrame], DataFrame]] = {
+    "joor": conform_joor,
+    "shopify": conform_shopify,
+    "tiktok": conform_tiktok,
+    "freight": conform_freight,
+    "gsheets": conform_gsheets,
+}

@@ -10,6 +10,7 @@ before hashing values.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -315,7 +316,9 @@ def plan_window(
     return tuple(window)
 
 
-_WINDOW_CACHE: tuple[str, ...] | None = None
+@functools.cache
+def _default_window() -> tuple[str, ...]:
+    return plan_window()
 
 
 def __getattr__(name: str):
@@ -323,10 +326,7 @@ def __getattr__(name: str):
     materialized on first access and cached for the process (the
     evidence files do not change mid-process)."""
     if name == "CHECK_FIRST":
-        global _WINDOW_CACHE
-        if _WINDOW_CACHE is None:
-            _WINDOW_CACHE = plan_window()
-        return _WINDOW_CACHE
+        return _default_window()
     raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 

@@ -32,6 +32,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import memo
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -117,18 +118,11 @@ def _signal_oracle() -> str:
 # it per invocation. The DataFrame is an immutable pure function of
 # (session, sf_dir) — memoizing the PLAN OBJECT (no persist; every
 # execution still scans the parquet) removes the rebuild the same way
-# parquet_memo reuses a scan node (r16 optimization round, guide §1.2:
+# a memoized scan node does (r16 optimization round, guide §1.2:
 # per-task work includes the driver's own expression construction).
-_SIGNALS_PLANS: dict[tuple[str, str], DataFrame] = {}
-
-
 def _signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from multichannel_commerce_data_pipeline_spark.tables import (
-        session_memo,
-    )
-
-    return session_memo(
-        spark, _SIGNALS_PLANS, sf_dir, lambda: _signals_plan(spark, sf_dir)
+    return memo(
+        spark, "signals_plan", sf_dir, lambda: _signals_plan(spark, sf_dir)
     )
 
 
@@ -177,27 +171,19 @@ def _signals_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     flags = T.gopher_flags_from(F.col("toks"), F.col("text"))
     # The LM and NB fits are independent bounded-aggregate collects
-    # (each cached per corpus version); run the two fit JOBS
+    # (each memoized per corpus version); run the two fit JOBS
     # concurrently so the second's map stage back-fills the first's
     # stage tail instead of idling 32 cores (r17, guide §2.6 "overlap
     # independent jobs" — the wave-8 threaded-materialization idiom
-    # applied to the mart's cold build). Warm calls hit both caches
-    # and never enter the pool.
-    from multichannel_commerce_data_pipeline_spark.queries.importance import (
-        _MODEL_CACHE,
-    )
+    # applied to the mart's cold build). The artifact store builds each
+    # fit exactly once, so warm calls just collect two hits.
+    from concurrent.futures import ThreadPoolExecutor
 
-    if ("lm", sf_dir) in _MODEL_CACHE and ("nb", sf_dir) in _MODEL_CACHE:
-        lmm = lm_model(spark, sf_dir)
-        sizes, (priors, lls) = nb_model(spark, sf_dir)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_lm = pool.submit(lm_model, spark, sf_dir)
-            f_nb = pool.submit(nb_model, spark, sf_dir)
-            lmm = f_lm.result()
-            sizes, (priors, lls) = f_nb.result()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_lm = pool.submit(lm_model, spark, sf_dir)
+        f_nb = pool.submit(nb_model, spark, sf_dir)
+        lmm = f_lm.result()
+        sizes, (priors, lls) = f_nb.result()
     best = nb_best_struct(F.col("bs"), sizes, priors, lls)
     lm_avg = I.score_buckets(F.col("ks"), lmm).cast("double") / F.size("ks")
     return grammed.select(
@@ -308,9 +294,6 @@ def _decision_oracle() -> str:
 # once per (session, sf_dir), shared by the decision query and the
 # rule-attribution report — the storage-investment rule the shared
 # gram/term indexes follow.
-_DECISION_FRAMES: dict[tuple[str, str], DataFrame] = {}
-
-
 def _decision_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full decision frame (doc_id, n_words, ppl_bucket, per-rule
     keep booleans, keep) shared by the decision query and the rule-
@@ -323,9 +306,6 @@ def _decision_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     same ``_signals`` frame, but a curator computing cut points from a
     SAMPLE must see a cutless language pass as 'unknown', not vanish
     through an inner join."""
-    from multichannel_commerce_data_pipeline_spark.tables import (
-        session_memo,
-    )
 
     def build() -> DataFrame:
         from pyspark import StorageLevel
@@ -334,7 +314,7 @@ def _decision_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             StorageLevel.MEMORY_AND_DISK
         )
 
-    return session_memo(spark, _DECISION_FRAMES, sf_dir, build)
+    return memo(spark, "decision_frame", sf_dir, build)
 
 
 def _decision_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import memo
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -22,7 +23,6 @@ from multichannel_commerce_data_pipeline_spark.queries import query
 from multichannel_commerce_data_pipeline_spark.tables import (
     load,
     parallelize_small_scan,
-    session_memo,
 )
 
 # Shared DuckDB fragments reproducing shingles()/doc_shingles():
@@ -109,9 +109,6 @@ def _jaccard_oracle(threshold: float, df_cap: int | None) -> str:
 # n_sh expression into scan filters on top). Persisted per corpus
 # version, hash-partitioned on the join key so neither join side
 # re-shuffles.
-_CAPPED_SH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _capped_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         from pyspark import StorageLevel
@@ -123,7 +120,7 @@ def _capped_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh.count()
         return sh
 
-    return session_memo(spark, _CAPPED_SH_CACHE, sf_dir, build)
+    return memo(spark, "capped_sh", sf_dir, build)
 
 
 @query("jaccard_near_dupes", oracle=_jaccard_oracle(_THRESHOLD, df_cap=400))
@@ -304,9 +301,6 @@ def incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.minhash_lsh_probe(idx, new_sig, k=16, bands=8, threshold=_THRESHOLD)
 
 
-_LSH_SIG_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _lsh_signature_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -332,7 +326,7 @@ def _lsh_signature_frames(
         )
         return (idx, new_sig)
 
-    return session_memo(spark, _LSH_SIG_CACHE, sf_dir, build)
+    return memo(spark, "lsh_sig", sf_dir, build)
 
 
 def _simhash_oracle(bits: int) -> str:
@@ -768,9 +762,6 @@ def _golden_oracle() -> str:
     """
 
 
-_IDENTITY_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _identity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc, cluster_id) over the blocked-Levenshtein customer match
     graph — the identity map, built once per sf_dir and persisted
@@ -789,7 +780,7 @@ def _identity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels.count()
         return labels
 
-    return session_memo(spark, _IDENTITY_CACHE, sf_dir, build)
+    return memo(spark, "identity", sf_dir, build)
 
 
 @query("entity_golden_record", oracle=_golden_oracle())
@@ -909,10 +900,6 @@ def _fs_sides(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 # The fitted (m, u, p) model is a per-corpus-version artifact like the
 # k-means centroids: the pattern reduction + 2 EM rounds run once per
 # (session, sf_dir); scoring reads the persisted 1-row frame.
-_FS_MODEL_CACHE: dict[tuple[str, str], DataFrame] = {}
-_FS_CONST_CACHE: dict[tuple[str, str], tuple[list, list, float]] = {}
-
-
 def _fs_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         from pyspark import StorageLevel
@@ -951,17 +938,18 @@ def _fs_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         patterns.unpersist()
         return params
 
-    return session_memo(spark, _FS_MODEL_CACHE, sf_dir, build)
+    return memo(spark, "fs_model", sf_dir, build)
 
 
 def _fs_fitted(spark: SparkSession, sf_dir: str) -> tuple[list, list, float]:
     """Collected fitted constants (bounded model collect: 2 arrays of 3
     doubles + a prior) for driver-side weight folding."""
+
     def build() -> tuple[list, list, float]:
         row = _fs_model(spark, sf_dir).collect()[0]
         return (list(row["m"]), list(row["u"]), float(row["p"]))
 
-    return session_memo(spark, _FS_CONST_CACHE, sf_dir, build)
+    return memo(spark, "fs_const", sf_dir, build)
 
 
 def _fs_em_chain() -> str:
@@ -1140,7 +1128,6 @@ def fs_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on that key, so neither pays an exchange, and the tokenize→hash
 # subtree executes once instead of once per consumer (Spark has no
 # DataFrame-level CSE).
-_SUBSTR_GRAM_CACHE: dict[tuple[str, str], DataFrame] = {}
 _SUBSTR_MIN_WORDS = 8
 
 
@@ -1159,7 +1146,7 @@ def _substring_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         g.count()
         return g
 
-    return session_memo(spark, _SUBSTR_GRAM_CACHE, sf_dir, build)
+    return memo(spark, "substr_gram", sf_dir, build)
 
 
 # The spans pipeline as shared SQL fragments: every substring query
@@ -1299,9 +1286,6 @@ def substring_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # One drain of the streaming decontaminate-on-ingest job per
 # (session, sf_dir) — same side-effecting-run rationale as below.
-_STREAM_DECON_DIRS: dict[tuple[str, str], str] = {}
-
-
 def _stream_decon_run(spark: SparkSession, sf_dir: str) -> str:
     def build() -> str:
         import hashlib
@@ -1339,7 +1323,7 @@ def _stream_decon_run(spark: SparkSession, sf_dir: str) -> str:
         )
         return out
 
-    return session_memo(spark, _STREAM_DECON_DIRS, sf_dir, build)
+    return memo(spark, "stream_decon_dir", sf_dir, build)
 
 
 @query(
@@ -1401,7 +1385,6 @@ def stream_decontaminate_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # checkpointed stream is a side-effecting run; re-draining per
 # DataFrame build would only re-prove what the first drain landed
 # (same rationale as the stream_ann_assign run).
-_STREAM_LINEDF_DIRS: dict[tuple[str, str], str] = {}
 _LINEDF_W, _LINEDF_D, _LINEDF_SEED = 64, 3, 131
 _LINEDF_PROBE_CUT = 20  # probe the distinct lines of docs 0..19
 
@@ -1439,7 +1422,7 @@ def _stream_linedf_run(spark: SparkSession, sf_dir: str) -> str:
         )
         return out
 
-    return session_memo(spark, _STREAM_LINEDF_DIRS, sf_dir, build)
+    return memo(spark, "stream_linedf_dir", sf_dir, build)
 
 
 def _linedf_oracle() -> str:
@@ -1557,9 +1540,6 @@ def stream_boilerplate_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # One drain of the cut-on-ingest stream per (session, sf_dir); the
 # maintain half is the memoized line-df sketch drain above.
-_STREAM_BPCUT_DIRS: dict[tuple[str, str], str] = {}
-
-
 def _stream_bpcut_run(spark: SparkSession, sf_dir: str) -> str:
     def build() -> str:
         import hashlib
@@ -1604,7 +1584,7 @@ def _stream_bpcut_run(spark: SparkSession, sf_dir: str) -> str:
         )
         return out
 
-    return session_memo(spark, _STREAM_BPCUT_DIRS, sf_dir, build)
+    return memo(spark, "stream_bpcut_dir", sf_dir, build)
 
 
 def _bpcut_oracle() -> str:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import memo
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -36,64 +37,55 @@ _D = I.N_BUCKETS
 _SEED = I.HASH_SEED
 _TARGET_LANG = "en"
 
-# Fitted models cached per sf_dir (training state, like the PQ codebook
-# and the bucketed warehouse tables): bench builds each query 4x and
-# the profile aggregate + collect is the dominant build cost.
-_MODEL_CACHE: dict[tuple[str, str], object] = {}
-
-
-def _cached(kind: str, sf_dir: str, fit):
-    key = (kind, sf_dir)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = fit()
-    return _MODEL_CACHE[key]
-
-
+# Fitted models memoized per corpus (training state, like the PQ
+# codebook and the bucketed warehouse tables): bench builds each query
+# 4x and the profile aggregate + collect is the dominant build cost.
 def lm_model(spark: SparkSession, sf_dir: str):
-    """The fitted hashed-bigram log-prob map (cached per sf_dir) —
-    shared by lm_perplexity_score and the curation signal mart so both
-    score against the SAME fit of the SAME full-corpus profile."""
+    """The fitted hashed-bigram log-prob map (one per corpus) — shared
+    by lm_perplexity_score and the curation signal mart so both score
+    against the SAME fit of the SAME full-corpus profile."""
     from multichannel_commerce_data_pipeline_spark.operators.text import (
         tokens,
     )
 
-    d = parallelize_small_scan(
-        spark, load(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    # staged hash-once form (r16 optimization round): bucket-hash each
-    # token in its own projected column, derive bigram keys by integer
-    # zip — bigram_bucket_keys inline would md5 every interior token
-    # twice (see its docstring)
-    hashed = d.select(
-        I.bucket_hashes(tokens(F.col("text")), _LM_D, _LM_SEED).alias("hb")
-    )
-    with_k = hashed.select(
-        I.bigram_keys_from_hashes(F.col("hb"), _LM_D).alias("ks")
-    )
-    return _cached(
-        "lm", sf_dir,
-        lambda: I.lm_log_probs(
+    def fit():
+        d = parallelize_small_scan(
+            spark, load(spark, sf_dir, "documents").select("doc_id", "text")
+        )
+        # staged hash-once form (r16 optimization round): bucket-hash
+        # each token in its own projected column, derive bigram keys by
+        # integer zip — bigram_bucket_keys inline would md5 every
+        # interior token twice (see its docstring)
+        hashed = d.select(
+            I.bucket_hashes(tokens(F.col("text")), _LM_D, _LM_SEED).alias("hb")
+        )
+        with_k = hashed.select(
+            I.bigram_keys_from_hashes(F.col("hb"), _LM_D).alias("ks")
+        )
+        return I.lm_log_probs(
             with_k.select(F.explode("ks").alias("key"))
             .groupBy("key")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect(),
             _LM_D,
-        ),
-    )
+        )
+
+    return memo(spark, "lm_model", sf_dir, fit)
 
 
 def nb_model(spark: SparkSession, sf_dir: str):
     """(sizes, (priors, lls)): the fitted hashed naive-Bayes language
-    model (cached per sf_dir) — shared for the same single-fit reason
-    as :func:`lm_model`."""
-    d = parallelize_small_scan(
-        spark, load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    )
-    with_b = d.select(
-        "doc_id", "lang", I.feature_buckets(F.col("text")).alias("bs")
-    )
+    model (one per corpus) — shared for the same single-fit reason as
+    :func:`lm_model`."""
 
-    def _fit():
+    def fit():
+        d = parallelize_small_scan(
+            spark,
+            load(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
+        )
+        with_b = d.select(
+            "doc_id", "lang", I.feature_buckets(F.col("text")).alias("bs")
+        )
         prof = I.bucket_class_profile(with_b, "bs", "lang").collect()
         sizes = {
             r["lang"]: r["n"]
@@ -103,7 +95,28 @@ def nb_model(spark: SparkSession, sf_dir: str):
         }
         return sizes, I.nb_log_model(prof, sizes)
 
-    return _cached("nb", sf_dir, _fit)
+    return memo(spark, "nb_model", sf_dir, fit)
+
+
+def dsir_model(spark: SparkSession, sf_dir: str) -> dict:
+    """The fitted DSIR log-ratio map toward ``_TARGET_LANG`` (one per
+    corpus) — shared by dsir_importance_weights and
+    corpus_prepare_curated."""
+
+    def fit() -> dict:
+        d = parallelize_small_scan(
+            spark,
+            load(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
+        )
+        with_b = d.select(
+            "doc_id", "lang", I.feature_buckets(F.col("text")).alias("bs")
+        )
+        return I.dsir_log_ratios(
+            I.bucket_class_profile(with_b, "bs", "lang").collect(),
+            _TARGET_LANG,
+        )
+
+    return memo(spark, "dsir_model", sf_dir, fit)
 
 
 def nb_best_struct(bs_col, sizes, priors, lls):
@@ -206,13 +219,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_b = d.select(
         "doc_id", "lang", I.feature_buckets(F.col("text")).alias("bs")
     )
-    ratios = _cached(
-        "dsir", sf_dir,
-        lambda: I.dsir_log_ratios(
-            I.bucket_class_profile(with_b, "bs", "lang").collect(),
-            _TARGET_LANG,
-        ),
-    )
+    ratios = dsir_model(spark, sf_dir)
     return with_b.select(
         "doc_id",
         "lang",
@@ -491,18 +498,7 @@ def nb_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_b = d.select(
         "doc_id", "lang", I.feature_buckets(F.col("text")).alias("bs")
     )
-
-    def _fit():
-        prof = I.bucket_class_profile(with_b, "bs", "lang").collect()
-        sizes = {
-            r["lang"]: r["n"]
-            for r in d.groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        return sizes, I.nb_log_model(prof, sizes)
-
-    sizes, (priors, lls) = _cached("nb", sf_dir, _fit)
+    sizes, (priors, lls) = nb_model(spark, sf_dir)
     per_class = F.array(
         *[
             F.struct(

@@ -17,12 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import memo
 from multichannel_commerce_data_pipeline_spark.functions import stage_filter
 from multichannel_commerce_data_pipeline_spark.queries import query
 from multichannel_commerce_data_pipeline_spark.tables import (
     load,
     parallelize_small_scan,
-    session_memo,
 )
 
 
@@ -431,8 +431,6 @@ def _pagerank_oracle(n_iters: int) -> str:
 # codebooks) — built once per session, reused by every ranking query
 # and every PageRank round; the per-basket-quadratic self-join is not
 # re-run per iteration.
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 # The per-order distinct item frame UNDER the edge index: the r8
 # verdict's shared-cold-build item. _copurchase_edges and the rec
 # model's train-side pair build (training_prep._rec_model) each paid
@@ -442,9 +440,6 @@ _EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
 # (l_orderkey partitioning satisfies the (l_orderkey, l_partkey)
 # dedup distribution as a key subset, so the distinct costs one
 # shuffle total, paid once per corpus version).
-_BASKET_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         from pyspark import StorageLevel
@@ -460,7 +455,7 @@ def _basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         items.count()
         return items
 
-    return session_memo(spark, _BASKET_CACHE, sf_dir, build)
+    return memo(spark, "basket", sf_dir, build)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -500,7 +495,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.count()
         return edges
 
-    return session_memo(spark, _EDGE_CACHE, sf_dir, build)
+    return memo(spark, "edge", sf_dir, build)
 
 
 # The degree-ANNOTATED graph index for ranking queries: (ed, deg)
@@ -509,9 +504,6 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the cached distribution. Annotation is a pure function of the graph
 # — re-deriving it per call re-ran the degree aggregate + join on
 # every query construction (r16 optimization round, guide §2.4).
-_PR_GRAPH_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _pagerank_graph(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -528,7 +520,7 @@ def _pagerank_graph(
         ed.count()
         return (ed, deg)
 
-    return session_memo(spark, _PR_GRAPH_CACHE, sf_dir, build)
+    return memo(spark, "pr_graph", sf_dir, build)
 
 
 @query("copurchase_pagerank", oracle=_pagerank_oracle(2))
@@ -587,11 +579,8 @@ def _bloom_oracle() -> str:
     """
 
 
-# Bloom filters are build-once artifacts like codebooks: keyed per
-# sf_dir because the dim predicate and sizing are constants here.
-_BLOOM_CACHE: dict[str, list] = {}
-
-
+# Bloom filters are build-once artifacts like codebooks: one per
+# corpus because the dim predicate and sizing are constants here.
 @query("bloom_semi_prune", oracle=_bloom_oracle())
 def bloom_semi_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X13: Bloom-filter semi-join pruning — the pre-shuffle fact
@@ -617,9 +606,7 @@ def bloom_semi_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
     )
-    if sf_dir not in _BLOOM_CACHE:
-        _BLOOM_CACHE[sf_dir] = bloom_build(dim, "c_custkey")
-    words = _BLOOM_CACHE[sf_dir]
+    words = memo(spark, "bloom", sf_dir, lambda: bloom_build(dim, "c_custkey"))
     # stage_filter (r17): the membership probe is one md5 per fact row
     # — a compute-heavy derived predicate, exactly the class
     # stage_filter exists for. Unpinned, Catalyst pushed it below the
@@ -724,9 +711,6 @@ def _triangles_oracle() -> str:
 # The degree orientation is a graph-layout artifact (it changes only
 # when the edge set does): persisted per corpus version like the edge
 # index itself, so motif queries pay the orient joins once per session.
-_ORIENTED_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _oriented_copurchase(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -749,7 +733,7 @@ def _oriented_copurchase(
         deg.count()
         return oriented, deg
 
-    return session_memo(spark, _ORIENTED_CACHE, sf_dir, build)
+    return memo(spark, "oriented", sf_dir, build)
 
 
 @query("copurchase_triangles", oracle=_triangles_oracle())
@@ -834,21 +818,19 @@ def copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# n_baskets is a corpus-level scalar (one bounded collect per sf_dir,
+# n_baskets is a corpus-level scalar (one bounded collect per corpus,
 # cached as a plain int like the BM25 corpus stats) — embedding it as a
 # literal keeps the rules computation join-free on the global total.
-_N_BASKETS_CACHE: dict[str, int] = {}
-
-
 def _n_baskets(spark: SparkSession, sf_dir: str) -> int:
-    if sf_dir not in _N_BASKETS_CACHE:
-        _N_BASKETS_CACHE[sf_dir] = (
-            load(spark, sf_dir, "lineitem")
-            .select("l_orderkey")
-            .distinct()
-            .count()
-        )
-    return _N_BASKETS_CACHE[sf_dir]
+    return memo(
+        spark,
+        "n_baskets",
+        sf_dir,
+        lambda: load(spark, sf_dir, "lineitem")
+        .select("l_orderkey")
+        .distinct()
+        .count(),
+    )
 
 
 def _rules_oracle() -> str:

@@ -41,13 +41,7 @@ from multichannel_commerce_data_pipeline_spark.queries import query
 
 
 def _silver(spark: SparkSession, source: str) -> DataFrame:
-    return {
-        "joor": silver.conform_joor,
-        "shopify": silver.conform_shopify,
-        "tiktok": silver.conform_tiktok,
-        "freight": silver.conform_freight,
-        "gsheets": silver.conform_gsheets,
-    }[source](flatten_envelope(read_bronze(spark, source)))
+    return silver.CONFORMERS[source](flatten_envelope(read_bronze(spark, source)))
 
 
 _WHOLESALE_REV = "unit_price * quantity"

@@ -16,6 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import (
+    _source_fingerprint,
+    memo,
+)
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -26,8 +30,6 @@ from multichannel_commerce_data_pipeline_spark.queries import query
 from multichannel_commerce_data_pipeline_spark.tables import (
     load,
     parallelize_small_scan,
-    parquet_memo,
-    session_memo,
 )
 
 _N_QUERIES = 8  # vec_id < 8 as the query set
@@ -500,21 +502,21 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PQ_M, _PQ_K, _PQ_STRIDE = 8, 16, 25
 
-# Codebook fitted once per sf_dir and reused across query builds (bench
+# Codebook fitted once per corpus and reused across query builds (bench
 # runs each query 4x): the model is training state — like the bucketed
-# warehouse tables — not per-query state. Keyed by sf_dir only because
-# the PQ parameters above are module constants.
-_PQ_CB_CACHE: dict[str, tuple[list, list]] = {}
-
-
+# warehouse tables — not per-query state. One per corpus because the PQ
+# parameters above are module constants.
 def _pq_cb(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
-    if sf_dir not in _PQ_CB_CACHE:
-        _PQ_CB_CACHE[sf_dir] = S.pq_codebook(
+    return memo(
+        spark,
+        "pq_codebook",
+        sf_dir,
+        lambda: S.pq_codebook(
             load(spark, sf_dir, "embeddings"),
             m=_PQ_M, k=_PQ_K, stride=_PQ_STRIDE,
             id_col="vec_id", vec_col="embedding",
-        )
-    return _PQ_CB_CACHE[sf_dir]
+        ),
+    )
 
 
 # The IVF-PQ inverted lists (vector -> cell + m codes) are the
@@ -523,9 +525,6 @@ def _pq_cb(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
 # persisted once per sf_dir, probed by every search. Per-query cost is
 # then probe-select + ADC only — re-encoding the corpus on every search
 # call is the wrong shape at any scale.
-_IVFPQ_INDEX_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-
-
 def _ivfpq_index(spark: SparkSession, sf_dir: str) -> "DataFrame":
     def build() -> "DataFrame":
         from pyspark import StorageLevel
@@ -540,7 +539,7 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> "DataFrame":
         idx.count()
         return idx
 
-    return session_memo(spark, _IVFPQ_INDEX_CACHE, sf_dir, build)
+    return memo(spark, "ivfpq_index", sf_dir, build)
 
 
 def _pq_oracle() -> str:
@@ -1039,9 +1038,6 @@ def _kmeans_oracle(
 # LSH signatures, cluster labels, BM25 stats): training runs once cold,
 # every later call pays only the bounded stats pass over the persisted
 # assignment frame.
-_KMEANS_MODEL_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _kmeans_model(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -1062,7 +1058,7 @@ def _kmeans_model(
         cents.count()
         return assign, cents
 
-    return session_memo(spark, _KMEANS_MODEL_CACHE, sf_dir, build)
+    return memo(spark, "kmeans_model", sf_dir, build)
 
 
 @query("kmeans_centroid_fit", oracle=_kmeans_oracle())
@@ -1275,9 +1271,6 @@ def _top_pc_oracle(iters: int = _PC_ITERS, dim: int = _KM_DIM) -> str:
 # The fitted direction is a per-corpus-version model artifact (64
 # doubles): persisted once, served to the dim report and the
 # anisotropy diagnostic alike.
-_PC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _pc_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         from pyspark import StorageLevel
@@ -1293,7 +1286,7 @@ def _pc_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         pc.count()
         return pc
 
-    return session_memo(spark, _PC_CACHE, sf_dir, build)
+    return memo(spark, "pc", sf_dir, build)
 
 
 @query("embedding_top_pc", oracle=_top_pc_oracle())
@@ -1449,7 +1442,7 @@ def rfm_kmeans_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 bounded max scalars; training cost is the k-means shape
     (broadcast centroids, N-row exchange, dim-bounded mean rollups),
     paid once per corpus version — the trained assignments persist as
-    a model artifact (_rfm_model, the _KMEANS_MODEL_CACHE rule) and
+    a model artifact (_rfm_model, the _kmeans_model rule) and
     warm calls measure the profile rollup."""
     assign = _rfm_model(spark, sf_dir)
     comp = lambda i: dround(  # noqa: E731
@@ -1468,11 +1461,8 @@ def rfm_kmeans_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The trained RFM segmentation is a per-corpus-version model artifact
-# exactly like the embedding k-means (_KMEANS_MODEL_CACHE): train once,
+# exactly like the embedding k-means (_kmeans_model): train once,
 # persist the assignments, serve every profile pass from them.
-_RFM_MODEL_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _rfm_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         from pyspark import StorageLevel
@@ -1489,7 +1479,7 @@ def _rfm_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign.count()
         return assign
 
-    return session_memo(spark, _RFM_MODEL_CACHE, sf_dir, build)
+    return memo(spark, "rfm_model", sf_dir, build)
 
 
 def _rfm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1530,9 +1520,6 @@ def _rfm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-running it per DataFrame build would only re-prove what the first
 # drain already materialized (same rationale as the MERGE snapshot
 # chain in warehouse_queries).
-_STREAM_ASSIGN_DIRS: dict[tuple[str, str], str] = {}
-
-
 def _stream_assign_run(spark: SparkSession, sf_dir: str) -> str:
     def build() -> str:
         import hashlib
@@ -1574,7 +1561,7 @@ def _stream_assign_run(spark: SparkSession, sf_dir: str) -> str:
         )
         return out
 
-    return session_memo(spark, _STREAM_ASSIGN_DIRS, sf_dir, build)
+    return memo(spark, "stream_assign_dir", sf_dir, build)
 
 
 @query(
@@ -1748,12 +1735,16 @@ def _pack_list_files(
 
 def _ivf_rows_per_file(spark: SparkSession, sf_dir: str) -> int:
     """128 MB target / measured average source row width (on-disk
-    parquet bytes per embedding row)."""
-    import os as _os
+    parquet bytes per embedding row). The table may be one parquet
+    file or a directory of part files; either way its bytes are the
+    sum of its parquet files' sizes."""
+    from pathlib import Path
 
-    src = _os.path.join(sf_dir, "embeddings.parquet")
+    src = Path(sf_dir) / "embeddings.parquet"
+    files = [src] if src.is_file() else src.rglob("*.parquet")
+    nbytes = sum(f.stat().st_size for f in files if f.is_file())
     n = load(spark, sf_dir, "embeddings").count()
-    row_bytes = max(1, _os.path.getsize(src) // max(1, n))
+    row_bytes = max(1, nbytes // max(1, n))
     return max(1, _LIST_TARGET_FILE_BYTES // row_bytes)
 
 
@@ -1780,7 +1771,6 @@ def ensure_ivf_list_layouts(
 
     from multichannel_commerce_data_pipeline_spark.queries.warehouse_queries import (
         _materialize_atomic,
-        _source_fingerprint,
     )
 
     tag = _source_fingerprint(sf_dir, "embeddings")
@@ -1985,7 +1975,9 @@ def ivf_rebalance_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     lists_dir, reb_dir = ensure_ivf_list_layouts(spark, sf_dir)
-    lists = parquet_memo(spark, lists_dir)
+    lists = memo(
+        spark, f"scan:{lists_dir}", sf_dir, lambda: spark.read.parquet(lists_dir)
+    )
     before = (
         lists.select(
             F.col("cell").cast("long").alias("src_cell"),
@@ -1997,7 +1989,9 @@ def ivf_rebalance_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.bit_xor("fp").alias("d_before"),
         )
     )
-    reb = parquet_memo(spark, reb_dir).select(
+    reb = memo(
+        spark, f"scan:{reb_dir}", sf_dir, lambda: spark.read.parquet(reb_dir)
+    ).select(
         F.col("cell").cast("long").alias("cell"),
         row_fingerprint([F.col("vid")]).alias("fp"),
     )

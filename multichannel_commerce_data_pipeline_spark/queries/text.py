@@ -10,6 +10,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import (
+    _source_fingerprint,
+    memo,
+)
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -21,8 +25,6 @@ from multichannel_commerce_data_pipeline_spark.queries import query
 from multichannel_commerce_data_pipeline_spark.tables import (
     load,
     parallelize_small_scan,
-    parquet_memo,
-    session_memo,
 )
 
 _STOP_IN = ", ".join(f"'{w}'" for w in T.STOPWORDS)
@@ -45,9 +47,6 @@ _STOP_IN = ", ".join(f"'{w}'" for w in T.STOPWORDS)
 # pre-aggregation repartition on token would funnel every occurrence
 # of a hot token through one reducer. The serving layout makes the
 # df-aggregate and the token join exchange-free.
-_TF_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _doc_term_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         from pyspark import StorageLevel
@@ -66,7 +65,7 @@ def _doc_term_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         tf.count()
         return tf
 
-    return session_memo(spark, _TF_INDEX_CACHE, sf_dir, build)
+    return memo(spark, "tf_index", sf_dir, build)
 
 
 @query(
@@ -808,9 +807,6 @@ def dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BM25_TERMS = ("spark", "query", "join")
 _BM25_K1 = 1.2
 _BM25_B = 0.75
-_BM25_STATS_CACHE: dict[str, object] = {}
-
-
 def _bm25_oracle() -> str:
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     idf = "ln(1 + (n.n_docs - df_t.df + 0.5) / (df_t.df + 0.5))"
@@ -885,10 +881,13 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, t in enumerate(_BM25_TERMS)
         ],
     )
-    # corpus model (N, avgdl, df) fitted once per sf_dir — training
+    # corpus model (N, avgdl, df) fitted once per corpus — training
     # state like the PQ codebooks, not per-query state
-    if sf_dir not in _BM25_STATS_CACHE:
-        _BM25_STATS_CACHE[sf_dir] = per_doc.agg(
+    stats = memo(
+        spark,
+        "bm25_stats",
+        sf_dir,
+        lambda: per_doc.agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("dl").cast("double").alias("dl_sum"),
             *[
@@ -897,8 +896,8 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 for i in range(len(_BM25_TERMS))
             ],
-        ).collect()[0]
-    stats = _BM25_STATS_CACHE[sf_dir]
+        ).collect()[0],
+    )
     avgdl = stats.dl_sum / stats.n_docs
     score = F.lit(None).cast("decimal(28,6)")
     contribs = []
@@ -1111,7 +1110,6 @@ def keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every phrase probe's term filter lands on the cached layout. At
 # 100 TB this is the inverted index you persist bucketed by token;
 # a phrase probe then reads ONLY the phrase terms' postings.
-_POS_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
 _PHRASE = ("hash", "join")
 
 
@@ -1134,7 +1132,7 @@ def _doc_pos_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx.count()
         return idx
 
-    return session_memo(spark, _POS_INDEX_CACHE, sf_dir, build)
+    return memo(spark, "pos_index", sf_dir, build)
 
 
 def phrase_probe(idx, terms: tuple[str, ...]):
@@ -1222,7 +1220,6 @@ def ensure_postings_state(spark: SparkSession, sf_dir: str) -> str:
 
     from multichannel_commerce_data_pipeline_spark.queries.warehouse_queries import (
         _materialize_atomic,
-        _source_fingerprint,
     )
 
     tag = _source_fingerprint(sf_dir, "documents")
@@ -1315,7 +1312,10 @@ def postings_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         row_fingerprint,
     )
 
-    state = parquet_memo(spark, ensure_postings_state(spark, sf_dir))
+    state_dir = ensure_postings_state(spark, sf_dir)
+    state = memo(
+        spark, f"scan:{state_dir}", sf_dir, lambda: spark.read.parquet(state_dir)
+    )
     delta = (
         parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
         .filter(F.col("doc_id") % 10 == 7)

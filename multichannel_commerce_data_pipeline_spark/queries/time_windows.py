@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import memo
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -1292,9 +1293,6 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # checkpoint-state) boundary.
 _CUSUM_REF_END = "1999-01-01"
 _CUSUM_SPLIT = "2000-06-01"
-_STREAM_CUSUM_DIRS: dict[tuple[str, str], str] = {}
-
-
 def _daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load(spark, sf_dir, "orders")
@@ -1378,9 +1376,8 @@ def _stream_cusum_run(spark: SparkSession, sf_dir: str) -> str:
         )
         return out
 
-    from multichannel_commerce_data_pipeline_spark.tables import session_memo
 
-    return session_memo(spark, _STREAM_CUSUM_DIRS, sf_dir, build)
+    return memo(spark, "stream_cusum_dir", sf_dir, build)
 
 
 def _stream_cusum_oracle() -> str:

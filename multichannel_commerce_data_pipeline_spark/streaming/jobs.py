@@ -34,20 +34,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from multichannel_commerce_data_pipeline_spark.pipeline import silver as silver_mod
-from multichannel_commerce_data_pipeline_spark.pipeline.bronze import flatten_envelope
+from multichannel_commerce_data_pipeline_spark.pipeline.bronze import (
+    flatten_envelope,
+    read_bronze,
+)
 from multichannel_commerce_data_pipeline_spark.pipeline.schemas import (
     bronze_glob,
     spark_envelope_ddl,
 )
-
-CONFORMERS: dict[str, Callable[[DataFrame], DataFrame]] = {
-    "joor": silver_mod.conform_joor,
-    "shopify": silver_mod.conform_shopify,
-    "tiktok": silver_mod.conform_tiktok,
-    "freight": silver_mod.conform_freight,
-    "gsheets": silver_mod.conform_gsheets,
-}
+from multichannel_commerce_data_pipeline_spark.pipeline.silver import CONFORMERS
 
 # Live scratch dirs per stream-query prefix, newest last; at most the
 # two most recent generations are retained (see fresh_stream_dir).
@@ -490,11 +485,7 @@ def stream_gold_cm2_refresh(
         read_bronze_stream(spark, "joor", bronze_root), "joor", watermark
     ).drop("bronze_ts")
     freight = CONFORMERS["freight"](
-        flatten_envelope(
-            spark.read.schema(spark_envelope_ddl("freight")).json(
-                bronze_glob("freight", bronze_root)
-            )
-        )
+        flatten_envelope(read_bronze(spark, "freight", bronze_root))
     )
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:

@@ -11,6 +11,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import memo
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -27,42 +29,18 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# Catalog-style memo of the lazy table frames, keyed like session_memo
-# by (applicationId, sf_dir, table). spark.read.parquet costs ~110 ms
-# of py4j reader setup + footer schema read PER CALL, and every one of
-# the 215 registered queries re-pays it for each table it touches
-# (profiled: 0.56 s of exec_daily_kpi's 1.3 s plan build was five
-# load() calls). The driver tables are immutable for a session's
-# lifetime, and a DataFrame is an immutable lazy plan — serving the
-# same handle is exactly what a catalog's resolved-relation cache
-# does. Entries from other sessions/applications are evicted on the
-# next call for the same (sf_dir, table); nothing is persisted, so
-# eviction is just a dict pop.
-#
-# Keyed by the SESSION, not just the application (r9 advice #2): both
-# the cached DataFrame and the events nanosAsLong conf are
-# SparkSession-scoped, so a spark.newSession() sibling (same appId)
-# must miss the cache and set its own conf. The cache value holds the
-# owning session object, which (a) lets the lookup verify identity and
-# (b) pins the id() from reuse while the entry lives.
-#
-# Same-app entries are bounded (r10 advice #3): a weakref on the
-# session cannot work here — every cached DataFrame strongly
-# references its owning session internally, so the weakref would never
-# die while the entry lives. Instead the cache keeps entries for at
-# most _SAME_APP_SESSION_CAP sibling sessions per application,
-# evicting the OLDEST sibling's entries (dict insertion order) when a
-# newer session pushes past the cap — a caller that churns
-# spark.newSession() in a loop now pins at most cap x tables lazy
-# frames instead of growing without bound.
-_LOAD_CACHE: dict[tuple[str, int, str, str], tuple[SparkSession, DataFrame]] = {}
-_SAME_APP_SESSION_CAP = 4
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan of one table (memoized per session — see
-    _LOAD_CACHE). Filters/projections applied by callers are pushed
-    into this scan by Catalyst (PushedFilters / ReadSchema).
+    """Parquet scan of one table. Filters/projections applied by
+    callers are pushed into this scan by Catalyst (PushedFilters /
+    ReadSchema).
+
+    The lazy frame is memoized in the artifact store, like a catalog's
+    resolved-relation cache: ``spark.read.parquet`` costs ~110 ms of
+    py4j reader setup + footer schema read PER CALL, and every query
+    re-pays it for each table it touches (profiled: 0.56 s of
+    exec_daily_kpi's 1.3 s plan build was five load() calls). The
+    store keys on the session, so a ``spark.newSession()`` sibling gets
+    a frame bound to itself and sets the events conf for itself.
 
     ``events.parquet`` stores ``ts`` as parquet TIMESTAMP(NANOS), which
     Spark 4.x rejects by default (PARQUET_TYPE_ILLEGAL). We read nanos
@@ -70,42 +48,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     DuckDB applies when it coerces TIMESTAMP_NS to its microsecond
     TIMESTAMP, so both engines see identical values.
     """
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir, name)
-    cached = _LOAD_CACHE.get(key)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
-    # Evict only entries from OTHER applications (their context is
-    # gone in the one-active-context harness). Same-app sibling
-    # sessions keep their own entries: evicting them would make two
-    # live sessions thrash the memo on every alternating load, and a
-    # sibling's entry dies with the shared context anyway (sessions
-    # have no independent stop), so same-app entries stay bounded by
-    # live-sessions x tables.
-    for stale in [
-        k for k in _LOAD_CACHE if k[2:] == key[2:] and k[0] != key[0]
-    ]:
-        _LOAD_CACHE.pop(stale)
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    _LOAD_CACHE[key] = (spark, df)
-    # bound same-app sibling sessions (oldest-session eviction, never
-    # the session that just inserted)
-    sessions = list(
-        dict.fromkeys(k[1] for k in _LOAD_CACHE if k[0] == key[0])
-    )
-    for sid in sessions[: max(0, len(sessions) - _SAME_APP_SESSION_CAP)]:
-        if sid == key[1]:
-            continue
-        for stale in [
-            k for k in _LOAD_CACHE if k[0] == key[0] and k[1] == sid
-        ]:
-            _LOAD_CACHE.pop(stale)
-    return df
+
+    def build() -> DataFrame:
+        if name == "events":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+            if dict(df.dtypes).get("ts") == "bigint":
+                df = df.withColumn(
+                    "ts", F.timestamp_micros(F.expr("ts div 1000"))
+                )
+            return df
+        return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+    return memo(spark, f"table:{name}", sf_dir, build)
 
 
 # Fan-out key preference for parallelize_small_scan (r16 optimization
@@ -212,74 +167,6 @@ def _estimate_scan_partitions(spark: SparkSession, df: DataFrame) -> int:
     parallelism = spark.sparkContext.defaultParallelism
     split = min(max_bytes, max(open_cost, total // max(parallelism, 1)))
     return max(1, -(-total // max(split, 1)))
-
-
-def session_memo(spark: SparkSession, cache: dict, sf_dir: str, build):
-    """Memoize a per-``sf_dir`` DataFrame artifact (persisted LSH index,
-    cluster labels, co-purchase edges, trained centroids, ...), keyed
-    ADDITIONALLY by the owning SparkSession's applicationId.
-
-    A cached/persisted DataFrame is bound to the session that built it:
-    if that session is stopped and a new one created in-process
-    (multi-session test suites, driver restarts), a plain
-    ``dict[sf_dir]`` hands back a frame whose SparkContext is dead and
-    every later use fails. Keying by (applicationId, sf_dir) makes a
-    fresh session rebuild the artifact; entries from other application
-    ids for the same sf_dir are evicted (their session is gone in the
-    one-active-session harness, and eviction keeps the dict bounded —
-    worst case a live concurrent session rebuilds, costing time, never
-    correctness)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in cache:
-        for stale in [k for k in cache if k[1] == sf_dir and k != key]:
-            evicted = cache.pop(stale)
-            # Best-effort release of the evicted artifact's cached
-            # blocks: in the common harness case its session is already
-            # dead (unpersist raises, nothing to free), but a live
-            # concurrent session's artifact would otherwise leak its
-            # storage until that session exits. Artifacts are either a
-            # DataFrame or a tuple/list that may CONTAIN DataFrames
-            # (e.g. (centroids_df, assignments_df)) — unwrap and
-            # unpersist each frame explicitly; scalar members
-            # (collected constants) have nothing to free.
-            members = (
-                evicted if isinstance(evicted, (tuple, list)) else (evicted,)
-            )
-            for member in members:
-                if isinstance(member, DataFrame):
-                    try:
-                        member.unpersist()
-                    except Exception:
-                        pass  # dead session: nothing to free
-        cache[key] = build()
-    return cache[key]
-
-
-# (applicationId, path) -> scan DataFrame for immutable published
-# artifacts — see parquet_memo.
-_PARQUET_SCANS: dict[tuple[str, str], DataFrame] = {}
-
-
-def parquet_memo(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` memoized per (session, path) for
-    IMMUTABLE-once-published artifact directories (the fingerprinted
-    ``ensure_*`` layouts: their path embeds the source digest and they
-    publish by atomic rename, so path identity == content identity).
-
-    Every fresh ``spark.read.parquet`` call re-lists the directory and
-    re-reads a footer for schema inference — driver-side work a real
-    warehouse does once per table via its catalog/manifest (guide §6:
-    file-listing cost; Iceberg/Delta's strongest practical argument).
-    Reusing the scan node reuses the session's cached FileIndex instead
-    of rebuilding it on every query construction. Only the UNEXECUTED
-    scan plan is cached — every execution still reads the parquet
-    files. Never use this for per-run temp dirs (a fresh path per call
-    would just grow the dict) or for dirs rewritten in place (the
-    snapshot would go stale)."""
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _PARQUET_SCANS:
-        _PARQUET_SCANS[key] = spark.read.parquet(path)
-    return _PARQUET_SCANS[key]
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -1327,30 +1327,6 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
     assert fp / 2000 < 0.05, fp  # (1-e^(-4*500/65536))^4 ~ 7e-7
 
 
-def test_session_memo_rebuilds_for_new_session():
-    """Cached per-sf_dir DataFrames are bound to the session that built
-    them: after a stop/recreate, a plain dict[sf_dir] cache hands back
-    a frame on a dead SparkContext. session_memo keys by applicationId
-    too — same session hits the cache, a NEW session rebuilds and
-    evicts the dead entry (bounded dict, no stale frames)."""
-    from types import SimpleNamespace
-
-    from multichannel_commerce_data_pipeline_spark.tables import session_memo
-
-    mk = lambda app: SimpleNamespace(  # noqa: E731
-        sparkContext=SimpleNamespace(applicationId=app)
-    )
-    cache, builds = {}, []
-    build = lambda tag: lambda: builds.append(tag) or tag  # noqa: E731
-    s1 = mk("app-1")
-    assert session_memo(s1, cache, "/sf", build("a")) == "a"
-    assert session_memo(s1, cache, "/sf", build("b")) == "a"  # cache hit
-    assert builds == ["a"]
-    s2 = mk("app-2")
-    assert session_memo(s2, cache, "/sf", build("c")) == "c"  # rebuilt
-    assert list(cache) == [("app-2", "/sf")]  # dead entry evicted
-
-
 def test_bloom_km_split_exact_at_word_boundary(spark):
     """The h2 split must TRUNCATE like the oracle's integer ``//``.
     Spark's Divide is double-valued, and on a raw 60-bit h the naive
@@ -2665,10 +2641,13 @@ def test_sampled_cuts_degrade_planted(spark, tmp_path):
 
 def test_boilerplate_persist_collision_guard(spark):
     """A 32-bit semanticHash collision must not serve another input's
-    persisted digest frame: poison the cache with a DIFFERENT corpus
-    under df1's key and assert the call detects the plan mismatch
-    (sameSemantics), rebuilds, and returns df1's own lines."""
+    persisted digest frame: poison the artifact store with a DIFFERENT
+    corpus under df1's key and assert the call detects the plan
+    mismatch (sameSemantics) and returns df1's own lines."""
+    from multichannel_commerce_data_pipeline_spark import artifacts as A
     from multichannel_commerce_data_pipeline_spark.operators import dedup as D
+
+    prefix = lambda df: f"boilerplate:{df.semanticHash()}:"  # noqa: E731
 
     df1 = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
@@ -2682,14 +2661,12 @@ def test_boilerplate_persist_collision_guard(spark):
         (r.doc, r.clean_text)
         for r in D.boilerplate_lines(df1, "doc", "text").collect()
     }
-    D._BOILERPLATE_PERSISTED.clear()
     D.boilerplate_lines(df1, "doc", "text", persist=True).collect()
-    (key1,) = list(D._BOILERPLATE_PERSISTED)
+    (key1,) = [k for k in A._STORE if k[2].startswith(prefix(df1))]
     D.boilerplate_lines(df2, "doc", "text", persist=True).collect()
-    poison = [
-        v for k, v in D._BOILERPLATE_PERSISTED.items() if k != key1
-    ][0]
-    D._BOILERPLATE_PERSISTED[key1] = poison  # simulated hash collision
+    (key2,) = [k for k in A._STORE if k[2].startswith(prefix(df2))]
+    poison = A._STORE[key2].value
+    A._STORE[key1].value = poison  # simulated hash collision
     got = {
         (r.doc, r.clean_text)
         for r in D.boilerplate_lines(
@@ -2697,8 +2674,6 @@ def test_boilerplate_persist_collision_guard(spark):
         ).collect()
     }
     assert got == want
-    assert not D._BOILERPLATE_PERSISTED[key1].sameSemantics(poison)
-    D._BOILERPLATE_PERSISTED.clear()
 
 
 # --- r15 query behavior tests ----------------------------------------

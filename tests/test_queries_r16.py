@@ -350,3 +350,32 @@ def test_ivf_list_layout_packs_files_by_data_size(spark, sf_dir):
             assert n_files == math.ceil(rows[cell] / rpf), (
                 f"{d} cell={cell}: {n_files} files for {rows[cell]} rows"
             )
+
+
+def test_ivf_rows_per_file_sums_part_files(spark, sf_dir, tmp_path):
+    """A table may be a directory of part files, not one parquet file:
+    with ``embeddings.parquet`` written as a directory, the rows-per-
+    file figure must come from the summed sizes of its parquet parts
+    (the directory's own inode size says nothing about the data)."""
+    import shutil
+    from pathlib import Path
+
+    from multichannel_commerce_data_pipeline_spark.queries.similarity import (
+        _LIST_TARGET_FILE_BYTES,
+        _ivf_rows_per_file,
+    )
+
+    corpus = tmp_path / "sf"
+    shutil.copytree(sf_dir, corpus)
+    emb = corpus / "embeddings.parquet"
+    emb.unlink()
+    spark.read.parquet(str(Path(sf_dir) / "embeddings.parquet")).repartition(
+        3
+    ).write.parquet(str(emb))
+    parts = list(emb.glob("*.parquet"))
+    assert emb.is_dir() and len(parts) == 3
+    n = spark.read.parquet(str(emb)).count()
+    row_bytes = sum(p.stat().st_size for p in parts) // n
+    assert _ivf_rows_per_file(spark, str(corpus)) == (
+        _LIST_TARGET_FILE_BYTES // row_bytes
+    )
